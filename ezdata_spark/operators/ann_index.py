@@ -93,8 +93,12 @@ def save_ann_index(
             )
         os.makedirs(path, exist_ok=True)
     if meta is not None:
-        with open(os.path.join(path, _SIDECAR), "w") as fh:
-            json.dump(meta, fh)
+        _write_sidecar(path, meta)
+
+
+def _write_sidecar(path: str, meta: dict) -> None:
+    with open(os.path.join(path, _SIDECAR), "w") as fh:
+        json.dump(meta, fh)
 
 
 def load_ann_index(
@@ -342,21 +346,32 @@ def save_ngram_lm(
     instead of paying three sequential job latencies. Artifact bytes
     and layout are identical to the sequential form (same three plans,
     same paths); the shared position-stream cache under all three
-    aggregates materializes once whichever job gets there first."""
-    from concurrent.futures import ThreadPoolExecutor
+    aggregates materializes once whichever job gets there first.
 
+    The sidecar (on ``tri``) is what :func:`load_ngram_lm` checks, so it
+    is removed before any write and written again only after all three
+    frames have landed: a save that fails partway leaves a path that
+    refuses to load, never a torn LM mixing new and old tables. The
+    first failure cancels the writes not yet started and is raised once
+    the writes already running have finished."""
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    tri_path = os.path.join(path, "tri")
+    sidecar = os.path.join(tri_path, _SIDECAR)
+    if os.path.exists(sidecar):
+        os.remove(sidecar)
     jobs = (
-        lambda: save_ann_index(
-            os.path.join(path, "tri"),
-            tri,
-            {"kind": "ngram_lm", "min_count": min_count, "alpha": alpha},
-        ),
+        lambda: save_ann_index(tri_path, tri),
         lambda: save_ann_index(os.path.join(path, "bi"), bi),
         lambda: save_ann_index(os.path.join(path, "uni"), uni),
     )
     with ThreadPoolExecutor(3) as pool:
-        for f in [pool.submit(j) for j in jobs]:
+        done, pending = wait([pool.submit(j) for j in jobs], return_when=FIRST_EXCEPTION)
+        for f in pending:
+            f.cancel()
+        for f in done:
             f.result()
+    _write_sidecar(tri_path, {"kind": "ngram_lm", "min_count": min_count, "alpha": alpha})
 
 
 def load_ngram_lm(

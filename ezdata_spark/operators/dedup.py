@@ -937,7 +937,20 @@ def trigram_similarity_pairs(
       never happens. Right when the DISTINCT gram table is bounded —
       char trigrams (``unit='char3'``): at most |alphabet|^3 grams
       exist no matter the corpus size, the same vocabulary-bounded
-      broadcast contract as the LM scoring joins (corpus.py)."""
+      broadcast contract as the LM scoring joins (corpus.py). Any other
+      ``unit`` raises ``ValueError``: its distinct-gram table grows with
+      the corpus vocabulary, with no bound a broadcast could rely on."""
+    if gram_df not in ("window", "broadcast"):
+        raise ValueError(
+            f"trigram_similarity_pairs: unknown gram_df {gram_df!r} "
+            "(expected 'window' or 'broadcast')"
+        )
+    if gram_df == "broadcast" and unit != "char3":
+        raise ValueError(
+            f"trigram_similarity_pairs: gram_df='broadcast' needs the "
+            f"vocabulary-bounded unit='char3', got unit={unit!r}; use "
+            "gram_df='window' for open-vocabulary units"
+        )
     if hash_verify:
         # hash at the source — BEFORE the per-doc distinct (r15): every
         # downstream frame (frequency agg, rank window, prefix join,
@@ -1017,11 +1030,6 @@ def trigram_similarity_pairs(
     # per-g window count IS the document frequency and the per-id count
     # IS the set size, and the rank order (gc, g) within each id is
     # unchanged.
-    if gram_df not in ("window", "broadcast"):
-        raise ValueError(
-            f"trigram_similarity_pairs: unknown gram_df {gram_df!r} "
-            "(expected 'window' or 'broadcast')"
-        )
     if gram_df == "broadcast":
         # df table = one map-side-combined aggregate (the exchange
         # carries distinct grams only — vocabulary-bounded), broadcast

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import tune_existing
+from .sources.parquet_meta import parquet_frame
 from .table import EzTable
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -55,7 +56,7 @@ def query(name: str, oracle: str | None = None):
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    df = parquet_frame(spark, f"{sf_dir}/{table}.parquet")
     # The events fixture's ts encoding has varied across regenerations:
     # TIMESTAMP(NANOS) (read as long nanos via nanosAsLong, set in
     # tune_existing), TIMESTAMP(MICROS, isAdjustedToUTC=0) (read as

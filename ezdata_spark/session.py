@@ -14,6 +14,18 @@ concept; everything here is Spark-native configuration chosen for scale:
 - shuffle.partitions sized for local[32]; on a real cluster AQE coalesces
   from a larger initial number, so we set the initial partition number
   high and let AQE shrink it.
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): PySpark 4
+  records the calling Python frame on every ``functions``/``Column``
+  call, several py4j round trips each, and plan construction makes
+  hundreds of such calls per query. The frames would only ever point
+  into this package's operator code, and they feed nothing but the
+  query context of the runtime errors ANSI mode raises — which is off.
+
+Plan construction also launches no Spark job for a single parquet
+file: ``sources.parquet_meta.parquet_frame`` reads the schema from the
+file footer on the driver (one footer read) instead of letting Spark
+infer it with a one-task job per read.
 """
 
 from __future__ import annotations
@@ -43,6 +55,7 @@ def get_spark(app_name: str = "ezdata-spark", shuffle_partitions: int | None = N
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     # getOrCreate returns an existing session with builder confs ignored;
@@ -59,6 +72,14 @@ def tune_existing(spark: SparkSession) -> SparkSession:
 
     The driver hands ``entry(spark)`` its own session; ANSI mode and AQE
     are runtime-settable SQL confs, so we align them here.
+
+    Call-site capture is not switched off here. Its conf
+    (``spark.python.sql.dataFrameDebugging.enabled``) is static, so a
+    live session rejects it, and a rejected set (an exception back
+    through py4j) would be paid on every catalog call; PySpark also
+    reads it only once per process, on the first ``Column`` call made
+    with an active session, and caches it. It takes effect only from
+    ``get_spark``'s builder.
     """
     for k, v in {
         "spark.sql.ansi.enabled": "false",

@@ -12,12 +12,52 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..table import EzTable
 
 _TABLE_KEY = "ez_table_meta"
+
+
+def parquet_frame(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    Spark infers a parquet schema with a one-task job that reads the
+    file footer on an executor. For a single file the footer is read
+    here on the driver instead, through the same JVM classes that job
+    runs (``ParquetFooterReader`` + ``ParquetFileFormat.
+    readSchemaFromFooter`` with a converter built from the session's
+    SQL conf), and the schema is handed to ``spark.read.schema(...)``.
+    The result is therefore identical to inference: nanosAsLong,
+    TIMESTAMP_NTZ inference, decimals and Spark's own row metadata
+    (field units/descriptions) all come out the same. The footer is
+    read on every call; nothing is cached.
+
+    Any other path (a directory of Spark-written part files, hive
+    partitions, a glob) keeps ``spark.read.parquet``, which merges or
+    discovers what a single footer cannot describe.
+    """
+    # fully qualified lookups: one py4j round trip per class, where
+    # attribute-chained package paths cost one per path segment
+    def jclass(name):
+        return getattr(spark._jvm, name)
+
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    jpath = jclass("org.apache.hadoop.fs.Path")(path)
+    if not jpath.getFileSystem(hconf).isFile(jpath):
+        return spark.read.parquet(path)
+    pq = "org.apache.spark.sql.execution.datasources.parquet."
+    footer = jclass(pq + "ParquetFooterReader").readFooter(
+        jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(jpath, hconf),
+        jclass("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+    )
+    schema = jclass(pq + "ParquetFileFormat").readSchemaFromFooter(
+        jclass("org.apache.parquet.hadoop.Footer")(jpath, footer),
+        jclass(pq + "ParquetToSparkSchemaConverter")(state.conf()),
+    )
+    return spark.read.schema(T.StructType.fromJson(json.loads(schema.json()))).parquet(path)
 
 
 def write_parquet(t: EzTable, path: str, mode: str = "overwrite", partition_by=None) -> None:
@@ -58,7 +98,7 @@ def write_parquet(t: EzTable, path: str, mode: str = "overwrite", partition_by=N
 
 
 def read_parquet(spark: SparkSession, path: str) -> EzTable:
-    df = spark.read.parquet(path)
+    df = parquet_frame(spark, path)
     units: dict[str, str] = {}
     desc: dict[str, str] = {}
     header: dict = {}

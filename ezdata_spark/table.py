@@ -51,7 +51,9 @@ class EzTable:
     # ------------------------------------------------------------------
     @classmethod
     def read_parquet(cls, spark: SparkSession, path: str, **meta) -> "EzTable":
-        return cls(spark.read.parquet(path), **meta)
+        from .sources.parquet_meta import parquet_frame
+
+        return cls(parquet_frame(spark, path), **meta)
 
     @classmethod
     def read(cls, spark: SparkSession, path: str, **kw) -> "EzTable":

@@ -98,6 +98,53 @@ def test_train_sample_arrow_reshape_matches_tolist(spark):
     assert Xe.size == 0
 
 
+def test_train_sample_inner_null_takes_row_list_path(spark, monkeypatch):
+    """A null ELEMENT inside a vector (not only a null vector) must take
+    the documented row-list path, and the sample must stay
+    bit-identical to what the zero-copy reshape returned for it (the
+    null element nulls the row's norm, so the whole row reads NaN)."""
+    import numpy as np
+
+    import ezdata_spark.operators.similarity as sim
+
+    rows = [(i, [float(i) + 0.5 * j for j in range(4)]) for i in range(1, 40)]
+    rows.append((99, [1.0, None, 3.0, 4.0]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(3)
+
+    col = (
+        sim.normalize(df, "embedding", "v")
+        .select("v")
+        .orderBy(F.xxhash64("v"))
+        .limit(1000)
+        .toArrow()
+        .column("v")
+        .combine_chunks()
+    )
+    assert col.null_count == 0 and col.flatten().null_count > 0
+    reshape = (
+        col.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(col), 4)
+    )
+
+    row_lists = []
+
+    class NumpySpy:
+        """numpy, recording the row-list path's np.asarray(to_pylist())."""
+
+        def __getattr__(self, name):
+            return getattr(np, name)
+
+        def asarray(self, a, *args, **kw):
+            row_lists.append(len(a))
+            return np.asarray(a, *args, **kw)
+
+    monkeypatch.setattr(sim, "np", NumpySpy())
+    got = sim._train_sample(df, "embedding", 42, None, 1000)
+    assert row_lists == [len(col)]
+    assert got.shape == reshape.shape
+    assert got.tobytes() == reshape.tobytes()
+    assert np.isnan(got).all(axis=1).sum() == 1
+
+
 def test_trigram_gram_df_broadcast_matches_window(spark):
     """r15: gram_df='broadcast' (map-combined df table broadcast onto
     the gram frame; no full-frame window by g) must return exactly the
@@ -139,3 +186,49 @@ def test_trigram_gram_df_broadcast_matches_window(spark):
 
     with _pytest.raises(ValueError, match="gram_df"):
         trigram_similarity_pairs(df, gram_df="nope")
+    # the broadcast df table is only vocabulary-bounded for char trigrams
+    for unit in ("word", 2):
+        with _pytest.raises(ValueError, match="gram_df"):
+            trigram_similarity_pairs(df, unit=unit, gram_df="broadcast")
+
+
+def test_save_ngram_lm_failed_write_never_publishes_torn_lm(spark, tmp_path, monkeypatch):
+    """save_ngram_lm writes the tri sidecar only after all three frames
+    have landed: a re-save whose uni write fails must leave a path
+    load_ngram_lm refuses, not the new tri/bi tables under a sidecar
+    paired with the old uni table."""
+    import ezdata_spark.operators.ann_index as ai
+    from ezdata_spark.operators.corpus import ngram_lm_build
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat the cat sat"), (2, "the dog sat on the mat")],
+        ["doc_id", "text"],
+    )
+    tri, bi, uni = ngram_lm_build(docs, min_count=1)
+    path = str(tmp_path / "lm")
+    ai.save_ngram_lm(path, tri, bi, uni)
+    assert ai.load_ngram_lm(spark, path)[3]["kind"] == "ngram_lm"
+
+    real_save = ai.save_ann_index
+
+    def failing_uni(p, *a, **kw):
+        if p.endswith("uni"):
+            raise OSError("injected uni write failure")
+        return real_save(p, *a, **kw)
+
+    monkeypatch.setattr(ai, "save_ann_index", failing_uni)
+    with pytest.raises(OSError, match="injected"):
+        ai.save_ngram_lm(path, tri, bi, uni, min_count=1)
+    with pytest.raises(ValueError, match="not an ngram_lm artifact"):
+        ai.load_ngram_lm(spark, path)
+
+    # a fresh path that fails the same way never becomes loadable either
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(OSError, match="injected"):
+        ai.save_ngram_lm(fresh, tri, bi, uni)
+    with pytest.raises(ValueError, match="not an ngram_lm artifact"):
+        ai.load_ngram_lm(spark, fresh)
+
+    monkeypatch.setattr(ai, "save_ann_index", real_save)
+    ai.save_ngram_lm(path, tri, bi, uni, min_count=1)
+    assert ai.load_ngram_lm(spark, path)[3]["min_count"] == 1
