@@ -27,6 +27,8 @@ import itertools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "build_word_vocab",
     "learn_bpe",
@@ -355,9 +357,9 @@ def learn_bpe(
         # byte-identical to the distributed path for any input
         words = [(list(r["symbols"]), int(r["count"])) for r in rows]
         merges = _train_bpe_driver(words, n_merges)
-        import pandas as pd
+        import pyarrow as pa
 
-        pdf = pd.DataFrame(
+        table = pa.table(
             {
                 "word": [r["word"] for r in rows],
                 "count": [int(r["count"]) for r in rows],
@@ -369,8 +371,10 @@ def learn_bpe(
         # runs two) re-ships the up-to-2M-row vocabulary from the
         # driver; checkpointed it becomes cluster-resident like the
         # distributed path's return
-        out = docs.sparkSession.createDataFrame(
-            pdf, schema="word string, count bigint, symbols array<string>"
+        out = local_frame(
+            docs.sparkSession,
+            table,
+            "word string, count bigint, symbols array<string>",
         ).localCheckpoint(eager=True)
         return merges, out
     merges: list[tuple[str, str]] = []

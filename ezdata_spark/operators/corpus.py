@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..cache import track
+from ..session import local_frame
 from .textstats import token_count, tokens
 
 __all__ = [
@@ -252,7 +253,7 @@ def decontaminate_stateless_bloom(
     """
     spark = docs.sparkSession
     grams = sorted(set(bench_ngrams))
-    gdf = spark.createDataFrame([(g,) for g in grams], "ng string")
+    gdf = local_frame(spark, [(g,) for g in grams], "ng string")
     words, m_bits = _bloom_build(gdf, "ng", bits_per_gram)
     return docs.withColumn(
         "maybe_contaminated",

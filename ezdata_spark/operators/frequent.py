@@ -7,18 +7,32 @@ DISTINCT value — at corpus scale that is billions of groups for an
 answer of k rows. The classic two-pass exact algorithm bounds the
 shuffle at k-proportional size instead:
 
-1. **Summary pass** (one scan, ZERO shuffle): each partition folds its
-   rows into a Misra-Gries summary of ``summary_size`` counters using
-   the mergeable-summaries merge (Agarwal, Cormode, Huang, Phillips,
-   Wei & Yi, "Mergeable Summaries", PODS 2012): add a batch's exact
-   counts, then subtract the (m+1)-th largest counter from all and
-   drop the non-positive. The subtracted total ``d_p`` is the
-   partition's error bound: any value absent from partition p's
-   summary has true count <= d_p there, so any value absent from
-   EVERY summary has global count <= D = sum(d_p).
-2. **Exact pass**: the candidate values (<= partitions x summary_size,
-   broadcast) are counted exactly with an ordinary semi-join +
-   hash aggregate — the shuffle now carries candidate values only.
+1. **Summary pass** (one scan): each partition folds its rows into a
+   Misra-Gries summary of ``summary_size`` counters using the
+   mergeable-summaries merge (Agarwal, Cormode, Huang, Phillips, Wei &
+   Yi, "Mergeable Summaries", PODS 2012): add a batch's exact counts,
+   then subtract the (m+1)-th largest counter from all and drop the
+   non-positive. The subtracted total ``d_p`` is the partition's error
+   bound: any value absent from partition p's summary has true count
+   <= d_p there, so any value absent from EVERY summary has global
+   count <= D = sum(d_p). Each partition emits its counters plus
+   ``d_p`` under the NULL value (no scanned row is NULL), and ONE
+   aggregate, ``groupBy(value).sum(mg)``, merges them: the NULL group
+   is D and every other row is one distinct candidate. That collected
+   result is exactly the candidate set (plus one row) that has to
+   reach the driver anyway to be broadcast, so collecting it costs no
+   more driver memory than the broadcast does (<= partitions x
+   ``summary_size`` values, and in practice far fewer after the merge).
+2. **Exact pass**: the candidate values, a local frame broadcast into a
+   semi-join, are counted exactly with an ordinary hash aggregate —
+   the shuffle now carries candidate values only.
+
+Job shape of an eager call: the summary aggregate (its map stage and
+the collect) and the exact pass (its map stage and the top-k
+collect), at most 5 jobs on an input with no shuffle of its own.
+Nothing is persisted, the summary is read once, and the top-k comes
+back through Arrow as a local frame (a ``LocalRelation``), so later
+actions on the result start no job.
 
 The result is EXACT (not approximate) whenever the k-th candidate's
 exact count strictly exceeds D — checked at runtime; on failure (the
@@ -38,6 +52,8 @@ import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 
 def heavy_hitters(
@@ -77,6 +93,7 @@ def heavy_hitters(
     """
     import numpy as np
     import pandas as pd
+    import pyarrow.compute as pc
 
     m = summary_size if summary_size is not None else max(32 * k, 256)
     if m < k:
@@ -104,76 +121,63 @@ def heavy_hitters(
                 if sub > 0:
                     d += int(sub)
                     cnt = cnt[cnt > sub] - sub
-        out = {"value": [], "mg": [], "is_bound": []}
-        frame = pd.DataFrame(out)
+        frame = pd.DataFrame({"value": [], "mg": []})
         if cnt is not None and len(cnt):
             frame = pd.DataFrame(
-                {
-                    "value": cnt.index.to_numpy(),
-                    "mg": cnt.to_numpy().astype("int64"),
-                    "is_bound": False,
-                }
+                {"value": cnt.index.to_numpy(), "mg": cnt.to_numpy().astype("int64")}
             )
-        bound = pd.DataFrame({"value": [None], "mg": [d], "is_bound": [True]})
+        # the partition's bound rides as the NULL value, which no
+        # scanned row can carry
+        bound = pd.DataFrame({"value": [None], "mg": [d]})
         yield pd.concat([frame, bound], ignore_index=True)
 
-    summ = src.mapInPandas(
-        _mg, f"value {dtype}, mg long, is_bound boolean"
-    ).persist()
-    try:
-        # D: max possible global count of any value outside the
-        # candidate set (sum of per-partition decrement totals)
-        D = summ.where("is_bound").agg(F.sum("mg")).collect()[0][0] or 0
-        if not materialize:
-            # self-contained lazy plan: candidates become a literal
-            # frame so the plan does not reference the (about to be
-            # unpersisted) summary — a re-run would re-scan the corpus
-            # for the summary otherwise
-            cand_rows = (
-                summ.where(~F.col("is_bound")).select("value").distinct().collect()
-            )
-            cand_lit = spark.createDataFrame(cand_rows, f"value {dtype}")
-            lazy = (
-                src.join(F.broadcast(cand_lit), "value", "left_semi")
-                .groupBy("value")
-                .agg(F.count(F.lit(1)).alias(count_col))
-                .orderBy(F.col(count_col).desc(), F.col("value").asc())
-                .limit(k)
-            )
-            return lazy, int(D)
-        cand = summ.where(~F.col("is_bound")).select("value").distinct()
-        counts = (
-            src.join(F.broadcast(cand), "value", "left_semi")
-            .groupBy("value")
-            .agg(F.count(F.lit(1)).alias(count_col))
-        )
-        rows = (
-            counts.orderBy(F.col(count_col).desc(), F.col("value").asc())
-            .limit(k)
-            .collect()
-        )
-        schema = f"value {dtype}, {count_col} long"
-        # Exact iff nothing outside the candidate set can reach rank k:
-        # D == 0 means no counter was ever decremented (the summaries
-        # hold EVERY scanned value), else the k-th candidate must
-        # strictly beat the best possible non-candidate (ties would be
-        # ambiguous under the value-asc tiebreak).
-        if D == 0 or (len(rows) == k and rows[-1][count_col] > D):
-            return spark.createDataFrame(rows, schema)
-        warnings.warn(
-            f"heavy_hitters: guarantee check failed (k-th count "
-            f"{rows[-1][count_col] if rows else 0} <= bound {D}); "
-            f"falling back to the full exact aggregate — raise "
-            f"summary_size (m={m}) to keep the bounded-shuffle path",
-            stacklevel=2,
-        )
-        exact = (
-            src.groupBy("value")
-            .agg(F.count(F.lit(1)).alias(count_col))
-            .orderBy(F.col(count_col).desc(), F.col("value").asc())
-            .limit(k)
-            .collect()
-        )
-        return spark.createDataFrame(exact, schema)
-    finally:
-        summ.unpersist()
+    # one aggregate: the NULL group sums the bounds to D, every other
+    # group is one distinct candidate
+    merged = (
+        src.mapInPandas(_mg, f"value {dtype}, mg long")
+        .groupBy("value")
+        .agg(F.sum("mg").alias("mg"))
+        .toArrow()
+    )
+    is_bound = pc.is_null(merged["value"])
+    # D: max possible global count of any value outside the candidate
+    # set (sum of per-partition decrement totals)
+    D = pc.sum(merged.filter(is_bound)["mg"]).as_py() or 0
+    cand = local_frame(
+        spark, merged.filter(pc.invert(is_bound)).select(["value"]), f"value {dtype}"
+    )
+    counts = (
+        src.join(F.broadcast(cand), "value", "left_semi")
+        .groupBy("value")
+        .agg(F.count(F.lit(1)).alias(count_col))
+    )
+    top = counts.orderBy(F.col(count_col).desc(), F.col("value").asc()).limit(k)
+    if not materialize:
+        # self-contained lazy plan: the candidates are a local frame, so
+        # a re-run does not re-scan the corpus for the summary
+        return top, int(D)
+    schema = f"value {dtype}, {count_col} long"
+    rows = top.toArrow()
+    # Exact iff nothing outside the candidate set can reach rank k:
+    # D == 0 means no counter was ever decremented (the summaries
+    # hold EVERY scanned value), else the k-th candidate must
+    # strictly beat the best possible non-candidate (ties would be
+    # ambiguous under the value-asc tiebreak).
+    kth = rows[count_col][-1].as_py() if rows.num_rows else 0
+    if D == 0 or (rows.num_rows == k and kth > D):
+        return local_frame(spark, rows, schema)
+    warnings.warn(
+        f"heavy_hitters: guarantee check failed (k-th count "
+        f"{kth} <= bound {D}); "
+        f"falling back to the full exact aggregate — raise "
+        f"summary_size (m={m}) to keep the bounded-shuffle path",
+        stacklevel=2,
+    )
+    exact = (
+        src.groupBy("value")
+        .agg(F.count(F.lit(1)).alias(count_col))
+        .orderBy(F.col(count_col).desc(), F.col("value").asc())
+        .limit(k)
+        .toArrow()
+    )
+    return local_frame(spark, exact, schema)

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -1547,15 +1549,20 @@ def _lloyd_subspaces(
             for j in range(m)
         ]
     dsub = X.shape[1] // m
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     with ThreadPoolExecutor(workers) as ex:
-        return list(
-            ex.map(
-                lambda j: _lloyd(X[:, j * dsub:(j + 1) * dsub], k, iters, seed + j),
-                range(m),
-            )
-        )
+        futs = [
+            ex.submit(_lloyd, X[:, j * dsub:(j + 1) * dsub], k, iters, seed + j)
+            for j in range(m)
+        ]
+        # the first failed fit cancels the fits not yet started and is
+        # raised once the running ones finish; fits start in submission
+        # order, so it comes before every cancelled one below
+        _, pending = wait(futs, return_when=FIRST_EXCEPTION)
+        for f in pending:
+            f.cancel()
+        return [f.result() for f in futs]
 
 
 def _train_sample(
@@ -1781,7 +1788,7 @@ def _pq_topk_numpy(
             T.StructField("cosine" if rescore else "score", T.DoubleType()),
             T.StructField("rank", T.IntegerType()),
         ]
-        return encoded.sparkSession.createDataFrame([], T.StructType(fields))
+        return local_frame(encoded.sparkSession, [], T.StructType(fields))
     qids = [r[0] for r in qrows]
     Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
     CB = np.asarray(codebooks, dtype=np.float64)  # (m, n_codes, dsub)

@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 DEFAULT_FNS = ("mean", "std", "min", "max", "p16", "p50", "p84", "has_nan")
 
 
@@ -99,7 +101,7 @@ def column_stats(df: DataFrame, columns: Sequence[str], fns: Sequence[str] | Non
     schema = "column string, " + ", ".join(
         f"{fn} boolean" if fn == "has_nan" else f"{fn} double" for fn in fns
     )
-    return spark.createDataFrame(out_rows, schema=schema)
+    return local_frame(spark, out_rows, schema)
 
 
 def stats_wide(df: DataFrame, columns: Sequence[str], fns: Sequence[str] | None = None) -> DataFrame:

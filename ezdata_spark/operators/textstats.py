@@ -13,6 +13,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # tiny per-language stopword lists for the n-gram/stopword heuristic;
 # deliberately small + deterministic (a real model is out of scope)
 _STOPWORDS = {
@@ -471,9 +473,7 @@ def logreg_train_hashed(
     b = float(init_bias)
     try:
         for _ in range(epochs):
-            w_df = spark.createDataFrame(
-                list(enumerate(w)), "bucket int, _w double"
-            )
+            w_df = local_frame(spark, list(enumerate(w)), "bucket int, _w double")
             scores = (
                 feats.join(F.broadcast(w_df), "bucket")
                 .groupBy(id_col)

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .operators.binned import BinSpec, binned_agg, guess_range
+from .session import local_frame
 from .table import EzTable
 
 
@@ -301,7 +302,8 @@ class Plotter:
         spark = df.sparkSession
         from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-        rdf = spark.createDataFrame(
+        rdf = local_frame(
+            spark,
             [
                 (e, float(lo), float(hi), ((hi - lo) if hi > lo else 1.0) / bins)
                 for e, (lo, hi) in ranges.items()
@@ -692,7 +694,8 @@ class Group:
             StructField("__hi", DoubleType()),
             StructField("__w", DoubleType()),
         ])
-        rdf = spark.createDataFrame(
+        rdf = local_frame(
+            spark,
             [
                 (k, lo, hi, ((hi - lo) if hi > lo else 1.0) / bins)
                 for k, (lo, hi) in ranges.items()

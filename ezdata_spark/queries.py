@@ -19,7 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import tune_existing
+from .session import local_frame, tune_existing
 from .sources.parquet_meta import parquet_frame
 from .table import EzTable
 
@@ -3953,9 +3953,7 @@ def q66a(spark, sf_dir):
         "label", (F.length("source") == 4).cast("double")
     )
     w, b = logreg_train(docs, vocab_size=64, epochs=2, lr=1.0)
-    weights = spark.createDataFrame(
-        sorted(w.items()), ["term", "weight"]
-    )
+    weights = local_frame(spark, sorted(w.items()), "term string, weight double")
     out = linear_score(docs, weights, bias=b)
     return out.select("doc_id", "n_tokens", F.round("prob", 6).alias("prob"))
 

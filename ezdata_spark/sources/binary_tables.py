@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 DEFAULT_CHUNK_ROWS = 10_000_000  # dask/hdf5.py:199 default
 
 
@@ -31,6 +33,14 @@ def _have(mod: str) -> bool:
         return True
     except ImportError:
         return False
+
+
+def _pandas_frame(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """A local frame over a driver-side pandas frame, typed from its
+    Arrow schema."""
+    import pyarrow as pa
+
+    return local_frame(spark, pa.Table.from_pandas(pdf, preserve_index=False))
 
 
 def _check_schema(schema, got, what: str) -> None:
@@ -72,7 +82,7 @@ def ingest_chunked(
     for path, n in zip(files, counts):
         for start in range(0, max(n, 1), chunk_rows):
             tasks.append((path, start, min(start + chunk_rows, n)))
-    task_df = spark.createDataFrame(tasks, "path string, start long, stop long").repartition(
+    task_df = local_frame(spark, tasks, "path string, start long, stop long").repartition(
         max(len(tasks), 1)
     )
 
@@ -164,7 +174,7 @@ def read_fits(
 
 def read_votable(spark: SparkSession, path: str):
     """VOTable scan (simpletable.py:1551-1565): driver-side parse ->
-    createDataFrame (VOTables are small interchange files).
+    local frame (VOTables are small interchange files).
 
     Uses astropy when present (BINARY/BINARY2 streams, exotic types);
     otherwise the stdlib-XML TABLEDATA reader in votable_native.py."""
@@ -179,7 +189,7 @@ def read_votable(spark: SparkSession, path: str):
     at = Table.read(path, format="votable")
     units = {n: str(at[n].unit) for n in at.colnames if at[n].unit is not None}
     desc = {n: at[n].description for n in at.colnames if at[n].description}
-    return EzTable(spark.createDataFrame(at.to_pandas()), units=units, desc=desc)
+    return EzTable(_pandas_frame(spark, at.to_pandas()), units=units, desc=desc)
 
 
 def to_latex(t, n: int = 30, name: str | None = None) -> str:
@@ -230,11 +240,11 @@ def from_dict(spark: SparkSession, data: dict, **meta):
     from ..table import EzTable
 
     pdf = pd.DataFrame(data)
-    return EzTable(spark.createDataFrame(pdf), **meta)
+    return EzTable(_pandas_frame(spark, pdf), **meta)
 
 
 def from_records(spark: SparkSession, rows: list[dict], **meta):
     """generator/rows ingest (from_lines, dictdataframe.py:352-375)."""
     from ..table import EzTable
 
-    return EzTable(spark.createDataFrame(pd.DataFrame.from_records(rows)), **meta)
+    return EzTable(_pandas_frame(spark, pd.DataFrame.from_records(rows)), **meta)

@@ -59,10 +59,10 @@ def read_jsonl(
 
 
 def _with_corrupt(spark: SparkSession, schema):
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StringType, StructField, StructType, _parse_datatype_string
 
     if isinstance(schema, str):
-        schema = spark.createDataFrame([], schema).schema
+        schema = _parse_datatype_string(schema)
     if any(f.name == CORRUPT_COL for f in schema.fields):
         return schema
     return StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])

@@ -5,7 +5,7 @@ VOTable is a public XML format (IVOA VOTable 1.4); the TABLEDATA
 serialization the reference exchanges is plain XML rows, so it parses
 with ``xml.etree.ElementTree`` driver-side. VOTables are small
 interchange files (catalog query results), so a driver parse +
-``createDataFrame`` is the right scale posture — bulk data belongs in
+``session.local_frame`` is the right scale posture — bulk data belongs in
 Parquet/FITS/HDF5.
 
 Supported: VOTABLE/RESOURCE/TABLE/FIELD metadata (name, datatype,
@@ -27,6 +27,8 @@ import xml.etree.ElementTree as ET
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 # IVOA datatype -> (Spark type, python converter)
 _VO_TYPES: dict[str, tuple[T.DataType, type]] = {
@@ -293,7 +295,7 @@ def read_votable_native(spark: SparkSession, path: str):
         )
         for f in fields
     ])
-    df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
+    df = local_frame(spark, rows, schema)
     units = {f["name"]: f["unit"] for f in fields if f["unit"]}
     desc = {f["name"]: f["desc"] for f in fields if f["desc"]}
     return EzTable(df, units=units, desc=desc)

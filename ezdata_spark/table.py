@@ -494,6 +494,8 @@ class EzTable:
         return self._clone(self.df.drop(*drop))
 
     def append_row(self, row: dict) -> "EzTable":
+        # not session.local_frame: a user row may hold any Python value,
+        # and createDataFrame reads a naive datetime as driver-local time
         new = self.spark.createDataFrame([row], schema=self.df.schema)
         return self._clone(self.df.unionByName(new))
 

@@ -23,10 +23,14 @@ def _exact_topk(values, k):
     return list(d.head(k).itertuples(index=False, name=None))
 
 
-def test_zipf_exact_no_fallback(spark):
+def _zipf_frame(spark, parts=8):
     rng = np.random.RandomState(7)
     vals = [f"tok{z}" for z in rng.zipf(1.5, 20_000) if z < 10_000]
-    df = spark.createDataFrame([(v,) for v in vals], "value string").repartition(8)
+    return vals, spark.createDataFrame([(v,) for v in vals], "value string").repartition(parts)
+
+
+def test_zipf_exact_no_fallback(spark):
+    vals, df = _zipf_frame(spark)
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any fallback warning -> failure
         got = heavy_hitters(df, "value", k=10, summary_size=512)
@@ -72,3 +76,58 @@ def test_no_residual_cache(spark):
     heavy_hitters(df, "value", k=1)
     jsc = spark.sparkContext._jsc.sc()
     assert jsc.getPersistentRDDs().size() == 0
+
+
+def test_eager_call_job_count(spark):
+    # one summary aggregate (map stage + result) and one candidate-
+    # filtered exact pass; no persist and no separate bound or distinct
+    # collects. The input has no shuffle of its own, so every job counted
+    # is the operator's.
+    df = spark.range(0, 20_000, numPartitions=8).select(
+        F.concat(
+            F.lit("tok"),
+            F.floor(F.lit(1.0) / (F.rand(7) + F.lit(1e-4))).cast("string"),
+        ).alias("value")
+    )
+    sc = spark.sparkContext
+    group = "test-heavy-hitters-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = heavy_hitters(df, "value", k=10, summary_size=512)
+    finally:
+        sc.setJobGroup("", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 1 <= n_jobs <= 5
+    assert got.count() == 10
+
+
+def test_leaves_persistent_rdds_unchanged(spark):
+    _, df = _zipf_frame(spark)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    heavy_hitters(df, "value", k=10, summary_size=512)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_result_plan_is_local(spark):
+    _, df = _zipf_frame(spark)
+    got = heavy_hitters(df, "value", k=10, summary_size=512)
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def _mg_bound(values, m):
+    # one Misra-Gries step over a partition small enough to arrive as a
+    # single Arrow batch: the (m+1)-th largest count is subtracted
+    counts = sorted(pd.Series(values).value_counts().to_numpy(), reverse=True)
+    return int(counts[m]) if len(counts) > m else 0
+
+
+def test_bound_is_sum_of_partition_bounds(spark):
+    m = 16
+    _, df = _zipf_frame(spark, parts=4)
+    parts = df.rdd.glom().map(lambda rows: [r[0] for r in rows]).collect()
+    assert len(parts) == 4 and all(len(p) < 10_000 for p in parts)
+    _, bound = heavy_hitters(df, "value", k=4, summary_size=m, materialize=False)
+    assert bound == sum(_mg_bound(p, m) for p in parts)
+    assert bound > 0
